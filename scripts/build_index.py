@@ -50,8 +50,8 @@ def main() -> None:
 
     t0 = time.time()
     if args.resumable:
-        build_partitioned(spark, corpus, args.output, n_parts=args.partitions)
-        idx = finalize_index(spark, args.output, n_parts=args.partitions, block=args.block)
+        build_partitioned(spark, corpus, args.output, n_parts=args.partitions, block=args.block)
+        idx = finalize_index(spark, args.output, n_parts=args.partitions)
         save_index(idx, f"{args.output}/final")
     else:
         idx = build_index(spark, corpus, block=args.block)

@@ -12,11 +12,14 @@ Layout
 - ``corpus``             deterministic Common-Crawl-style corpus synthesis + adapters
 - ``functions.tokenizer``  Flex-parity tokenizer (reference txt-seg/lexer.eng.l)
 - ``functions.codec``      delta + varbyte posting codec (reference codec/for.c role)
-- ``operators.postings``   tokens -> posting lists / doc_meta / term_stats
-- ``operators.blocks``     posting blocks with block-max metadata (mem-index role)
-- ``plans.build``          end-to-end index build (indexer/ role)
+- ``operators.blocks``     the one inverter: corpus -> packed posting blocks with
+                           block-max metadata + doc-meta rows (mem-index role),
+                           and the stats / decode over those blocks
+- ``operators.postings``   salted two-phase per-term aggregation (skew pattern)
+- ``plans.build``          end-to-end index build, save / load / merge (indexer/ role)
 - ``plans.query``          BM25 top-k query engine w/ WAND pruning (search/ role)
-- ``plans.checkpoint``     per-partition lineage + resumable build
+- ``plans.checkpoint``     per-partition lineage + resumable build (same inverter)
+- ``streaming.ingest``     micro-batch ingest through the same inverter
 - ``operators.dedup``      exact / minhash-LSH / simhash / ngram-jaccard / embedding dedup
 - ``operators.similarity`` brute-force + LSH-bucketed ANN over embeddings
 - ``operators.textstats``  language-ID, quality scoring, token counts, fingerprints

@@ -90,12 +90,8 @@ def get_index(spark: SparkSession, sf_dir: str) -> InvertedIndex:
             "text",
             "doc_id",
         )
-        idx = build_index(spark, docs, id_col="doc_id")
-        idx.blocks = idx.blocks.persist()
-        idx.blocks.count()
-        idx.doc_blocks = idx.doc_blocks.persist()
-        idx.doc_blocks.count()
-        _INDEX_CACHE[key] = idx
+        # build_index persists the block table and materializes it
+        _INDEX_CACHE[key] = build_index(spark, docs, id_col="doc_id")
     return _INDEX_CACHE[key]
 
 

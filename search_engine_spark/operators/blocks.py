@@ -34,21 +34,21 @@ exactly once. Every consumer that decodes posting blocks filters the
 sentinel out (and the serving path filters blocks by query term, which a
 sentinel can never match).
 
-Scale notes: packing runs after ``repartitionByRange(term, doc_id)`` +
-``sortWithinPartitions`` — a hot term's posting list is *split across
-partitions* (each yielding its own block run), so no reducer ever owns a
-stopword's full 10^11-entry list. Packing itself is streaming per Arrow
-batch: a term spanning batches just produces one extra partial block, which
-the query path merges transparently.
+Scale notes: the blocks are doc-range sharded (every term of a doc in one
+partition), so a hot term's posting list is *split across partitions* (each
+yielding its own block run) and no task ever owns a stopword's full
+10^11-entry list. Packing streams per doc chunk: a term spanning chunks just
+produces one extra partial block, which the query path merges transparently.
+
+``invert_pack_blocks`` is the only writer of blocks and ``unpack_blocks``
+the only reader that decodes them back to posting rows.
 """
 
 from __future__ import annotations
 
-import os
 from collections.abc import Iterator
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.types import (
     ArrayType,
@@ -63,6 +63,8 @@ from pyspark.sql.types import (
 from ..functions import codec
 
 DEFAULT_BLOCK = 512  # posting entries per block (reference: ~12KB blocks, mem-index/config.h:12-16)
+TF_CAP = 2048  # tf / positions kept per posting (term-index/config.h:1)
+INVERT_CHUNK_DOCS = 10000  # docs inverted per kernel chunk (bounds its memory)
 
 # Sentinel term of the doc-meta side-channel rows: "\x00" sorts before any
 # real token and the tokenizer can never emit a NUL byte, so no collision.
@@ -261,83 +263,6 @@ def _doc_meta_sentinel(doc_ids: np.ndarray, lens: np.ndarray):
     )
 
 
-def pack_blocks(
-    postings_with_doclen: DataFrame,
-    block: int = DEFAULT_BLOCK,
-    num_partitions: int | None = None,
-    layout: str = "term",
-    assume_doc_partitioned: bool = False,
-) -> DataFrame:
-    """(term, doc_id, tf, positions, doclen) -> packed block rows.
-
-    ``layout``:
-    - "term": range-partition on (term, doc_id) — co-locates each term's
-      posting run (split across partitions for skewed terms); the layout
-      for WAND metadata sweeps and bulk analytics over posting lists.
-    - "doc": range-partition on doc_id ONLY — every term of a given doc
-      lives in the same shard. This is the classic document-sharded
-      serving layout: a query becomes a narrow per-shard DAAT kernel with
-      local top-k and a tiny global merge — ZERO shuffle per query
-      (plans/serve.py). Real-world distributed engines (incl. the
-      reference behind a sharding proxy) serve this way.
-    """
-    sc = postings_with_doclen.sparkSession.sparkContext
-    # 4 partitions per core: smaller per-task sorts pipeline better and stay
-    # in execution memory (measured 23s -> 14s at local[32], 23M rows)
-    nparts = num_partitions or 4 * sc.defaultParallelism
-    if layout == "doc":
-        if assume_doc_partitioned:
-            # inverted rows inherit the corpus's doc-range partitioning
-            # (assign_doc_ids range-partitions by url == doc order; the
-            # tokenizer is narrow) — reuse it: sort within partitions only,
-            # NO exchange at all for the serving layout
-            arranged = postings_with_doclen.sortWithinPartitions("term", "doc_id")
-        else:
-            arranged = postings_with_doclen.repartitionByRange(
-                nparts, "doc_id"
-            ).sortWithinPartitions("term", "doc_id")
-    else:
-        arranged = postings_with_doclen.repartitionByRange(
-            nparts, "term", "doc_id"
-        ).sortWithinPartitions("term", "doc_id")
-
-    def pack(batches) -> Iterator["pa.RecordBatch"]:
-        # mapInArrow: the positions list column is consumed through its flat
-        # values buffer + offsets — NO per-row Python objects for the 10^7
-        # posting entries, only per-BLOCK work (codec calls on numpy slices).
-        import pyarrow as pa
-        import pyarrow.compute as pc
-
-        for batch in batches:
-            if batch.num_rows == 0:
-                continue
-            cols = {n: batch.column(i) for i, n in enumerate(batch.schema.names)}
-            tdict = pc.dictionary_encode(cols["term"])
-            tidx = tdict.indices.to_numpy().astype(np.int64)
-            vocab = tdict.dictionary.to_pylist()
-            doc_ids = cols["doc_id"].to_numpy()
-            tfs = cols["tf"].to_numpy().astype(np.int64)
-            dls = cols["doclen"].to_numpy().astype(np.int64)
-            pvb = cols["pos_vb"]
-            # BinaryArray flat buffers: [validity, int32 offsets, data]
-            bufs = pvb.buffers()
-            raw_off = np.frombuffer(bufs[1], dtype=np.int32)
-            pos_boff = raw_off[pvb.offset : pvb.offset + len(pvb) + 1].astype(np.int64)
-            # entry position blobs must tile a contiguous buffer from 0 for
-            # the vectorized pack; a sliced Arrow array view may not start
-            # at byte 0, so rebase
-            pos_bytes = np.frombuffer(bufs[2], dtype=np.uint8)[
-                pos_boff[0] : pos_boff[-1]
-            ]
-            pos_boff = pos_boff - pos_boff[0]
-            yield from _emit_blocks_arrow(
-                tidx, tdict.dictionary, doc_ids.astype(np.int64), tfs, dls,
-                pos_bytes, pos_boff, block,
-            )
-
-    return arranged.mapInArrow(pack, BLOCK_SCHEMA)
-
-
 def _binary_col_bytes(col) -> np.ndarray:
     """Contiguous uint8 view of a pyarrow BinaryArray's payload, in row
     order (a sliced array view may not start at buffer byte 0 — rebase)."""
@@ -451,38 +376,33 @@ def block_meta(blocks: DataFrame) -> DataFrame:
 def invert_pack_blocks(
     docs: DataFrame,
     block: int = DEFAULT_BLOCK,
-    tf_cap: int = 2048,
-    num_partitions: int | None = None,
     assume_doc_partitioned: bool = False,
-    text_col: str = "text",
 ) -> DataFrame:
-    """FUSED tokenize -> document inversion -> block pack: corpus rows in,
-    packed doc-layout posting blocks out, ONE map-side Arrow stage.
+    """FUSED tokenize -> document inversion -> block pack: corpus rows
+    ``(doc_id, text)`` in, packed doc-layout posting blocks out, ONE
+    map-side Arrow stage. This is the engine's only inverter: the batch
+    build, every resumable-build partition and every streaming micro-batch
+    run it.
 
-    Why fused: the unfused pipeline materializes ~50 posting rows per doc
-    through the Python->JVM Arrow boundary and caches them before the pack
-    kernel reads them all back. At 400k docs the row transfer + cache cost
-    ~45s of a 75s local[32] build while the tokenizer kernel itself is ~3s.
-    This stage ships only the packed blocks (~40x fewer rows, varbyte
-    blobs), which is also the 10^12-doc shape: nothing per-posting ever
-    leaves the executor.
+    Why fused: nothing per-posting ever crosses the Python->JVM Arrow
+    boundary; the stage ships only the packed blocks (~40x fewer rows than
+    posting rows, varbyte blobs), which is also the 10^12-doc shape.
 
-    Since round 5 this is also the ONLY corpus scan of the whole build:
-    block-max metadata is avgdl-independent (block_max_tf/block_min_dl,
-    bound evaluated at serve time) and each doc chunk additionally emits a
-    DOC_META_TERM sentinel row carrying its (doc_id, doclen) pairs, from
-    which docN/avgdl/doc_meta all derive downstream — no doclen pre-pass.
-    Semantics match inverted_frame + pack_blocks(layout="doc") exactly
-    (modulo the sentinel rows, filtered by every decoder): same tokenizer,
-    same tf cap (2048 + position slice), same block packing; only the
-    block boundaries may differ (per Arrow batch rather than per cached
-    partition), which no consumer observes (doc runs within a term stay
-    sorted; WAND metadata is per-block).
+    It is also the ONLY corpus scan of a build: block-max metadata is
+    avgdl-independent (block_max_tf/block_min_dl, bound evaluated at serve
+    time) and each doc chunk additionally emits a DOC_META_TERM sentinel
+    row carrying its (doc_id, doclen) pairs, from which docN/avgdl/doc_meta
+    all derive downstream — no doclen pre-pass. tf and positions are
+    capped at TF_CAP per posting; doclen is the uncapped token count.
+
+    ``assume_doc_partitioned``: the input partitions are already doc-id
+    ranges (url-range docIDs from ``assign_doc_ids``); only sort within
+    them instead of range-repartitioning.
     """
     from ..functions.tokenizer import tokenize_text
 
     sc = docs.sparkSession.sparkContext
-    base = docs.select("doc_id", text_col)
+    base = docs.select("doc_id", "text")
     if assume_doc_partitioned:
         # docIDs were assigned by url-range partitioning: partitions are
         # already doc ranges; just order within them
@@ -498,12 +418,10 @@ def invert_pack_blocks(
         # 0.96s at 128 parts vs 0.34s at 32, same data; serving coalesces
         # per query, but unpack/scan paths read the layout as built).
         para = sc.defaultParallelism
-        nparts = num_partitions or max(para, min(4 * para, base.rdd.getNumPartitions()))
+        nparts = max(para, min(4 * para, base.rdd.getNumPartitions()))
         arranged = base.repartitionByRange(nparts, "doc_id").sortWithinPartitions(
             "doc_id"
         )
-
-    chunk_docs = int(os.environ.get("SPARK_GRAFT_INVERT_CHUNK", "10000"))
 
     def _invert_emit_chunk(doc_ids: np.ndarray, tok_lists: list):
         """Tokenized docs -> packed block RecordBatches for one doc chunk.
@@ -511,8 +429,7 @@ def invert_pack_blocks(
         A chunk is a contiguous doc-id range, so emitting per chunk keeps
         every term's blocks doc-ascending and non-overlapping across the
         partition; a term spanning chunks just yields one extra partial
-        block (same property the unfused pipeline had per Arrow batch),
-        which no consumer observes. One stable argsort on the term index
+        block, which no consumer observes. One stable argsort on the term index
         is the whole inversion: the token stream already arrives in
         (doc asc, pos asc) order, so stability gives (term, doc, pos)."""
         import pyarrow as pa
@@ -541,8 +458,8 @@ def invert_pack_blocks(
         gstart = np.flatnonzero(newgrp)
         gend = np.r_[gstart[1:], total]
         raw_tf = gend - gstart
-        tf = np.minimum(raw_tf, tf_cap).astype(np.int64)
-        # keep only the first tf positions of each entry (the 2048 cap)
+        tf = np.minimum(raw_tf, TF_CAP).astype(np.int64)
+        # keep only the first tf positions of each entry (the TF_CAP cap)
         grp_id = np.cumsum(newgrp) - 1
         within = np.arange(total, dtype=np.int64) - gstart[grp_id]
         keep = within < tf[grp_id]
@@ -586,7 +503,7 @@ def invert_pack_blocks(
             nrows = batch.num_rows
             at = 0
             while at < nrows:
-                take = min(chunk_docs - pending_n, nrows - at)
+                take = min(INVERT_CHUNK_DOCS - pending_n, nrows - at)
                 sl = batch.slice(at, take)
                 pending_ids.append(sl.column(0).to_numpy())
                 pending_toks.extend(
@@ -595,7 +512,7 @@ def invert_pack_blocks(
                 )
                 pending_n += take
                 at += take
-                if pending_n >= chunk_docs:
+                if pending_n >= INVERT_CHUNK_DOCS:
                     yield from _flush()
         yield from _flush()
 

@@ -3,37 +3,46 @@
 corpus (url, warc_ts, html, text, lang)
   -> doc_ids     (url, doc_id)                       [I8]
   -> ONE fused Arrow stage: tokenize -> invert -> block pack [I2-I13]
+     (operators.blocks.invert_pack_blocks, the engine's only inverter)
      emitting packed posting blocks + doc-meta sentinel rows
   -> doc_meta / docN / avgdl   derived from sentinel rows    [I10]
   -> term_stats  (term, df, cf) pure column agg over blocks  [I10]
   -> docstore    (doc_id, url, text)                 [I15; Parquet/Iceberg
                   column compression replaces the reference's gzip blobs I14]
 
-Single-scan build (round 5): block-max metadata is avgdl-independent
+Single-scan build: block-max metadata is avgdl-independent
 (block_max_tf/block_min_dl; the WAND bound is evaluated at serve time), so
-the corpus is tokenized EXACTLY ONCE — the round-4 doclen pre-pass that
-existed only to bake avgdl into the packed blocks is gone, which at 100 TB
-removes an entire extra pass over the input. docN/avgdl/doc_meta derive
-from the sentinel side-channel rows the fused stage emits per doc chunk,
-and term_stats is a whole-stage-codegen aggregate over block metadata.
+the corpus is tokenized EXACTLY ONCE. docN/avgdl/doc_meta derive from the
+sentinel side-channel rows the fused stage emits per doc chunk, and
+term_stats is a whole-stage-codegen aggregate over block metadata. The
+resumable build (plans/checkpoint.py) runs the same stage per input
+partition and derives the same stats from the union of its committed
+blocks (``index_from_blocks``).
 
 Dataflow shape on a cluster (cf. SURVEY §3.1): tokenize+pack is narrow
-(inherits the docID bucketing); the only data shuffles left in a build are
-the docID assignment exchange and nothing else — stats/term_stats are tiny
-metadata aggregates. All writes are partitioned table writes. With Iceberg
+(inherits the docID bucketing); the only data shuffle left in a build is
+the docID assignment exchange — stats/term_stats are tiny metadata
+aggregates. A saved index holds ONE posting-block table (``blocks/``) in
+the doc-sharded serving layout. All writes are table writes. With Iceberg
 available the writer targets an Iceberg table (see sources/tables.py); in
 this sandbox we write Parquet directories with the same layout.
 """
 
 from __future__ import annotations
 
+import os
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from ..functions.tokenizer import inverted_frame
-from ..operators import postings as P
-from ..operators.blocks import DEFAULT_BLOCK, pack_blocks
+from ..operators.blocks import (
+    DEFAULT_BLOCK,
+    collection_stats_from_blocks,
+    doc_meta_from_blocks,
+    invert_pack_blocks,
+    term_stats_from_blocks,
+    unpack_blocks,
+)
 from ..operators.docids import assign_doc_ids
 from ..sources.tables import read_table, write_table
 
@@ -42,14 +51,21 @@ from ..sources.tables import read_table, write_table
 class InvertedIndex:
     """Umbrella handle over the index tables (reference indices/indices.c)."""
 
-    postings: DataFrame  # uncompressed posting rows (term, doc_id, tf, positions, doclen)
-    blocks: DataFrame  # packed posting blocks, term-range layout
+    # posting rows (term, doc_id, tf, doclen, positions): a lazy decode of
+    # ``blocks`` (unpack_blocks), never a stored table
+    postings: DataFrame
+    # THE posting-block table: packed blocks + doc-meta sentinel rows in
+    # the doc-sharded layout (every doc's blocks in one partition)
+    blocks: DataFrame
     doc_meta: DataFrame  # (doc_id, doclen)
     term_stats: DataFrame  # (term, df, cf)
     docstore: DataFrame  # (doc_id, url, text)
     docN: int
     avgdl: float
-    doc_blocks: DataFrame | None = None  # packed blocks, doc-sharded layout (serving)
+    # the blocks the shard kernel serves: ``blocks`` itself on every built,
+    # loaded or merged index; attach_posting_cache swaps in the cold half
+    # and None forces the set-oriented scorer
+    doc_blocks: DataFrame | None = None
     # posting-cache pool broadcast (pool, bounds) set by
     # plans.cache.attach_posting_cache; carried on the index handle (NOT on
     # a DataFrame attribute, which silently vanishes under any transform)
@@ -66,127 +82,73 @@ class InvertedIndex:
         return self
 
 
+def index_from_blocks(blocks: DataFrame, docstore: DataFrame) -> InvertedIndex:
+    """Index handle over packed blocks (with their doc-meta sentinel rows)
+    and a docstore: docN/avgdl/len_sum, doc_meta and term_stats all derive
+    from the blocks. The collection-stats aggregate is the one action; on
+    a persisted ``blocks`` it materializes the build's single corpus scan."""
+    stats = collection_stats_from_blocks(blocks)
+    return InvertedIndex(
+        postings=unpack_blocks(blocks),
+        blocks=blocks,
+        doc_meta=doc_meta_from_blocks(blocks),
+        term_stats=term_stats_from_blocks(blocks),
+        docstore=docstore,
+        docN=stats["docN"],
+        avgdl=stats["avgdl"],
+        doc_blocks=blocks,
+        len_sum=stats["len_sum"],
+    )
+
+
 def build_index(
     spark: SparkSession,
     corpus: DataFrame,
     block: int = DEFAULT_BLOCK,
     id_col: str | None = None,
-    keep_row_postings: bool = True,
-    persist: bool = True,
-    term_layout_blocks: bool = False,
-    fused: bool = True,
 ) -> InvertedIndex:
-    """Build all index tables from a corpus DataFrame.
+    """Build all index tables from a corpus DataFrame in ONE corpus scan:
+    tokenize -> invert -> block-pack as a single map-side Arrow stage
+    (invert_pack_blocks) whose output also carries the doc-meta sentinel
+    rows; docN/avgdl/doc_meta/term_stats all derive from the blocks.
 
     ``id_col``: use an existing stable id column instead of assigning
     row_number-over-url docIDs (any stable total order preserves the
     reference's semantics; the default matches FIXTURES.md).
 
-    ``fused`` (default): the ONE-SCAN build — tokenize -> invert ->
-    block-pack as a single map-side Arrow stage (invert_pack_blocks) whose
-    output also carries the doc-meta sentinel rows; docN/avgdl/doc_meta/
-    term_stats all derive from the persisted blocks, so the corpus text is
-    read and tokenized exactly once. ``fused=False`` keeps the two-stage
-    pipeline that materializes the inverted posting rows (required for
-    ``term_layout_blocks``).
-
-    ``persist``: cache the frames consumed by several downstream actions;
-    without it every action re-runs tokenization. On a real cluster this
-    is the Indri-buffer analogue: materialize each boundary once.
+    The docs frame (fused pack + docstore) and the blocks (every stats
+    aggregate + serving) are persisted — the Indri-buffer analogue:
+    materialize each boundary once.
     """
-    from ..operators.blocks import (
-        collection_stats_from_blocks,
-        doc_meta_from_blocks,
-        invert_pack_blocks,
-        term_stats_from_blocks,
-        unpack_blocks,
-    )
-
     if id_col is None:
         docs = assign_doc_ids(corpus, "url")
     else:
         docs = corpus.withColumn("doc_id", F.col(id_col).cast("long"))
+    docs = docs.select("doc_id", "url", "text").persist()
+    # docIDs from url-range partitioning leave the corpus doc-range
+    # partitioned -> the serving layout needs no exchange at all
+    blocks = invert_pack_blocks(
+        docs, block=block, assume_doc_partitioned=(id_col is None)
+    ).persist()
+    return index_from_blocks(blocks, docs)
 
-    docs = docs.select("doc_id", "url", "text")
-    if fused and not term_layout_blocks:
-        if persist:
-            # feeds the fused pack AND the docstore
-            docs = docs.persist()
-        # docIDs from url-range partitioning leave the corpus doc-range
-        # partitioned -> the serving layout needs no exchange at all
-        doc_blocks = invert_pack_blocks(
-            docs, block=block, assume_doc_partitioned=(id_col is None)
-        )
-        if persist:
-            doc_blocks = doc_blocks.persist()
-        # the one action of the build: materializes the fused scan into the
-        # persisted blocks and reads docN/avgdl off the sentinel metadata
-        stats = collection_stats_from_blocks(doc_blocks)
-        return InvertedIndex(
-            postings=unpack_blocks(doc_blocks) if keep_row_postings else None,
-            blocks=doc_blocks,
-            doc_meta=doc_meta_from_blocks(doc_blocks),
-            term_stats=term_stats_from_blocks(doc_blocks),
-            docstore=docs.select("doc_id", "url", "text"),
-            docN=stats["docN"],
-            avgdl=stats["avgdl"],
-            doc_blocks=doc_blocks,
-            len_sum=stats["len_sum"],
-        )
 
-    # unfused path: materialize inverted posting rows (also the source for
-    # the optional term-clustered layout, which needs a (term, doc_id)
-    # exchange over per-posting rows)
-    rows_dl = inverted_frame(docs)
-    dmeta = P.doc_meta_from_inverted(rows_dl, docs)
-    if persist:
-        rows_dl = rows_dl.persist()
-        dmeta = dmeta.persist()
-    stats = P.collection_stats(dmeta)
-    tstats = P.term_stats(rows_dl)
-    doc_blocks = pack_blocks(
-        rows_dl, block=block, layout="doc",
-        assume_doc_partitioned=(id_col is None),
-    )
-    blocks = (
-        pack_blocks(rows_dl, block=block)
-        if term_layout_blocks
-        else doc_blocks
-    )
-    docstore = docs.select("doc_id", "url", "text")
-
-    return InvertedIndex(
-        # row-level postings view (positions as array<int>) decodes from the
-        # packed blocks on demand; the raw inverted rows carry varbyte bytes
-        postings=unpack_blocks(blocks) if keep_row_postings else None,
-        blocks=blocks,
-        doc_meta=dmeta,
-        term_stats=tstats,
-        docstore=docstore,
-        docN=stats["docN"],
-        avgdl=stats["avgdl"],
-        doc_blocks=doc_blocks,
-        len_sum=stats.get("len_sum"),
-    )
+def write_blocks(blocks: DataFrame, target: str) -> None:
+    """Write posting blocks with an explicit ``_shard`` column (the writing
+    partition id). A raw parquet re-read splits big files at row-group
+    boundaries, which can land ONE document's blocks in TWO partitions and
+    silently break the doc-sharded serving invariant (observed at 400k
+    docs: >128MB files + default maxPartitionBytes); ``read_blocks``
+    restores the layout from ``_shard``."""
+    write_table(blocks.withColumn("_shard", F.spark_partition_id()), target)
 
 
 def save_index(index: InvertedIndex, path: str) -> None:
     """Persist index tables (Parquet dirs; Iceberg when a catalog is up).
 
-    ``doc_blocks`` carries an explicit ``_shard`` column (the writing
-    partition id): a raw parquet re-read splits big files at row-group
-    boundaries, which can land ONE document's blocks in TWO partitions and
-    silently break the doc-sharded serving invariant (observed at 400k
-    docs: >128MB files + default maxPartitionBytes). load_index restores
-    the layout by hash-repartitioning on ``_shard`` — hashing never splits
-    a shard value, and merging whole shards preserves doc disjointness.
-    """
-    write_table(index.blocks, f"{path}/blocks", partition_cols=None)
-    if index.doc_blocks is not None:
-        write_table(
-            index.doc_blocks.withColumn("_shard", F.spark_partition_id()),
-            f"{path}/doc_blocks",
-        )
+    The posting blocks are stored ONCE, in ``blocks/`` (see write_blocks);
+    the loaded handle serves and decodes that one table."""
+    write_blocks(index.blocks, f"{path}/blocks")
     write_table(index.doc_meta, f"{path}/doc_meta")
     write_table(index.term_stats, f"{path}/term_stats")
     write_table(index.docstore, f"{path}/docstore")
@@ -248,60 +210,67 @@ def _effective_max_split_bytes(spark: SparkSession, file_sizes: list[int]) -> in
     return min(max_pb, max(open_cost, bytes_per_core))
 
 
-def load_index(spark: SparkSession, path: str, with_row_postings: bool = False) -> InvertedIndex:
-    from ..operators.blocks import unpack_blocks
+def read_blocks(spark: SparkSession, *targets: str) -> DataFrame:
+    """Posting blocks written by ``write_blocks`` (one table, or the union
+    of several), back in the doc-sharded serving layout.
 
-    import os
-
-    blocks = read_table(spark, f"{path}/blocks")
-    if not {"block_max_tf", "block_min_dl"}.issubset(set(blocks.columns)):
-        # pre-round-5 block schema (block_max_tfn, no serve-time extremes):
-        # fail HERE with a clear message instead of an opaque missing-column
-        # error at serve time
+    The serving invariant is only that every doc's blocks land in ONE
+    partition. A parquet split never crosses a FILE boundary: splits either
+    take whole files (merging whole shards is invariant-preserving) or carve
+    a big file at row-group boundaries (invariant-BREAKING: observed at 400k
+    docs). A file is never carved when it fits one EFFECTIVE split —
+    computed the way FilePartition.maxSplitBytes does (openCost + the
+    bytes-per-core shrink), NOT from maxPartitionBytes alone. Only then
+    serve straight off the scan (zero per-query exchange); otherwise
+    restore the layout by hash-repartitioning on the writing shard id —
+    hashing never splits a shard value, and merging whole shards (also
+    equal ids from different tables) preserves doc disjointness.
+    """
+    blocks = (
+        read_table(spark, targets[0]) if len(targets) == 1 else spark.read.parquet(*targets)
+    )
+    if not {"block_max_tf", "block_min_dl", "_shard"}.issubset(blocks.columns):
+        # pre-round-5 block schema (block_max_tfn, no serve-time extremes)
+        # or the two-table layout (blocks/ + doc_blocks/, no _shard): fail
+        # HERE with a clear message instead of an opaque missing-column
+        # error or a silently broken shard layout at serve time
         raise ValueError(
-            f"index at {path!r} uses an old block format (missing "
-            "block_max_tf/block_min_dl); rebuild the index with this version"
+            f"posting blocks at {targets[0]!r} use an old block format (missing "
+            "block_max_tf/block_min_dl or the _shard column); rebuild the "
+            "index with this version"
         )
+    try:
+        sizes = [
+            os.path.getsize(os.path.join(t, f))
+            for t in targets
+            for f in os.listdir(t)
+            if f.endswith(".parquet")
+        ]
+    except OSError:
+        sizes = []
+    eff = _effective_max_split_bytes(spark, sizes) if sizes else None
+    if eff is not None and max(sizes) <= eff:
+        return blocks.drop("_shard")
+    n = spark.sparkContext.defaultParallelism * 4
+    return blocks.repartition(n, "_shard").drop("_shard")
+
+
+def load_index(spark: SparkSession, path: str) -> InvertedIndex:
+    """A saved index: its one posting-block table serves as both
+    ``blocks`` and ``doc_blocks`` (the same DataFrame, so ``cache()``
+    warms exactly what serving reads); ``postings`` is its lazy decode."""
+    blocks = read_blocks(spark, f"{path}/blocks")
     srow = spark.read.parquet(f"{path}/stats").collect()[0]
-    doc_blocks = None
-    if os.path.exists(f"{path}/doc_blocks"):
-        doc_blocks = read_table(spark, f"{path}/doc_blocks")
-        if "_shard" in doc_blocks.columns:
-            # The serving invariant is only that every doc's blocks land in
-            # ONE partition. A parquet split never crosses a FILE boundary:
-            # splits either take whole files (merging whole shards is
-            # invariant-preserving) or carve a big file at row-group
-            # boundaries (invariant-BREAKING: observed at 400k docs). A file
-            # is never carved when it fits one EFFECTIVE split — computed
-            # the way FilePartition.maxSplitBytes does (openCost + the
-            # bytes-per-core shrink), NOT from maxPartitionBytes alone.
-            # Only then serve straight off the scan (zero per-query
-            # exchange); otherwise restore the layout by repartitioning on
-            # the writing shard id.
-            try:
-                sizes = [
-                    os.path.getsize(os.path.join(f"{path}/doc_blocks", f))
-                    for f in os.listdir(f"{path}/doc_blocks")
-                    if f.endswith(".parquet")
-                ]
-            except OSError:
-                sizes = []
-            eff = _effective_max_split_bytes(spark, sizes) if sizes else None
-            if eff is not None and max(sizes) <= eff:
-                doc_blocks = doc_blocks.drop("_shard")
-            else:
-                n = spark.sparkContext.defaultParallelism * 4
-                doc_blocks = doc_blocks.repartition(n, "_shard").drop("_shard")
     len_sum = int(srow["len_sum"]) if "len_sum" in srow.__fields__ else -1
     return InvertedIndex(
-        postings=unpack_blocks(blocks) if with_row_postings else None,
+        postings=unpack_blocks(blocks),
         blocks=blocks,
         doc_meta=read_table(spark, f"{path}/doc_meta"),
         term_stats=read_table(spark, f"{path}/term_stats"),
         docstore=read_table(spark, f"{path}/docstore"),
         docN=int(srow["docN"]),
         avgdl=float(srow["avgdl"]),
-        doc_blocks=doc_blocks,
+        doc_blocks=blocks,
         len_sum=None if len_sum < 0 else len_sum,
     )
 
@@ -309,8 +278,6 @@ def load_index(spark: SparkSession, path: str, with_row_postings: bool = False) 
 def merge_indexes(
     left: InvertedIndex,
     right: InvertedIndex,
-    block: int = DEFAULT_BLOCK,
-    persist: bool = True,
     validate: bool = True,
 ) -> InvertedIndex:
     """Merge two indexes built over DISJOINT docID sets — METADATA-ONLY.
@@ -348,11 +315,7 @@ def merge_indexes(
         )
         if overlap:
             raise ValueError("merge_indexes: docID sets overlap")
-    from ..operators.blocks import unpack_blocks
-
-    lb = left.doc_blocks if left.doc_blocks is not None else left.blocks
-    rb = right.doc_blocks if right.doc_blocks is not None else right.blocks
-    doc_blocks = lb.unionByName(rb)
+    blocks = left.blocks.unionByName(right.blocks)
     dmeta = left.doc_meta.unionByName(right.doc_meta.select(*left.doc_meta.columns))
     tstats = (
         left.term_stats.select("term", "df", "cf")
@@ -373,13 +336,13 @@ def merge_indexes(
         )
 
     return InvertedIndex(
-        postings=unpack_blocks(doc_blocks),
-        blocks=doc_blocks,
+        postings=unpack_blocks(blocks),
+        blocks=blocks,
         doc_meta=dmeta,
         term_stats=tstats,
         docstore=left.docstore.unionByName(right.docstore),
         docN=docN,
         avgdl=avgdl,
-        doc_blocks=doc_blocks,
+        doc_blocks=blocks,
         len_sum=len_sum,
     )

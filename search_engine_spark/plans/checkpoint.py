@@ -4,16 +4,23 @@ The reference restarts ingestion from Indri's persisted docN
 (indexer/index.c:25-38) and periodically flushes (index_maintain,
 indexer/index.c:188-196). At cluster scale we instead split the corpus into
 deterministic input partitions (hash of url), commit each partition's
-posting-delta independently, and record a lineage manifest row per
-partition: ``(partition_id, status, n_docs, wall_ms)``. A restarted build
-reads the manifest, skips committed partitions, and produces a final index
-byte-identical to an uninterrupted run. With Iceberg, each partition commit
-is a table snapshot; on Parquet we write one subdirectory per partition +
-a manifest parquet (append-only), which gives the same idempotency.
+packed posting blocks (the same fused ``invert_pack_blocks`` stage the
+batch build runs, doc-meta sentinel rows included) plus its docstore slice
+independently, and record a lineage manifest row per partition:
+``(partition_id, status, n_docs, wall_ms, ...)``. A restarted build reads
+the manifest, skips committed partitions, and produces a final index
+identical to an uninterrupted run. With Iceberg, each partition commit is a
+table snapshot; on Parquet we write one subdirectory per partition + a
+manifest parquet (append-only), which gives the same idempotency.
+
+Finalizing is log replay, not a second pack (cf. *Delta Lake*, VLDB 2020):
+the final block table IS the union of the manifest-listed partitions'
+blocks, and every statistic derives from them the way ``build_index``
+derives its own.
 
 docIDs are assigned globally BEFORE partitioning (deterministic row_number
-over url), so per-partition deltas are disjoint and order-independent —
-this is what makes resume byte-identical regardless of which partitions
+over url), so per-partition blocks are disjoint and order-independent —
+this is what makes resume identical regardless of which partitions
 committed first.
 """
 
@@ -24,15 +31,19 @@ import time
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from ..functions.tokenizer import inverted_frame
-from ..operators import postings as P
+from ..operators.blocks import DEFAULT_BLOCK, DOC_META_TERM, invert_pack_blocks
 from ..operators.docids import assign_doc_ids
+from .build import index_from_blocks, read_blocks, write_blocks
 
 MANIFEST = "lineage"
 
 
 def _manifest_path(path: str) -> str:
     return os.path.join(path, MANIFEST)
+
+
+def _delta_dir(path: str, pid: int) -> str:
+    return os.path.join(path, f"delta_p{pid:04d}")
 
 
 def committed_partitions(spark: SparkSession, path: str) -> set[int]:
@@ -50,8 +61,9 @@ def build_partitioned(
     n_parts: int = 8,
     fail_after: int | None = None,
     id_col: str | None = None,
+    block: int = DEFAULT_BLOCK,
 ) -> set[int]:
-    """Tokenize + write per-partition posting deltas with lineage.
+    """Invert + pack each input partition and commit its blocks with lineage.
 
     ``fail_after``: test hook — raise after committing that many partitions
     (simulates a mid-build crash for the resume test).
@@ -71,27 +83,30 @@ def build_partitioned(
         if pid in done:
             continue
         t0 = time.time()
-        part = docs.filter(F.col("part_id") == pid)
-        inv = inverted_frame(part)
-        lens = inv.groupBy("doc_id").agg(F.max("doclen").alias("doclen"))
-        part_docs = part.select("doc_id", "url", "text")
-        delta_dir = os.path.join(path, f"delta_p{pid:04d}")
-        inv.write.mode("overwrite").parquet(os.path.join(delta_dir, "postings"))
-        part_docs.join(lens, "doc_id", "left").select(
-            "doc_id", "url", "text", F.coalesce("doclen", F.lit(0)).alias("doclen")
-        ).write.mode("overwrite").parquet(os.path.join(delta_dir, "docs"))
-        n_docs = part.count()
+        part = docs.filter(F.col("part_id") == pid).select("doc_id", "url", "text")
+        delta_dir = _delta_dir(path, pid)
+        # a filter keeps assign_doc_ids' doc-range partitioning, exactly as
+        # in build_index
+        write_blocks(
+            invert_pack_blocks(part, block=block, assume_doc_partitioned=(id_col is None)),
+            os.path.join(delta_dir, "blocks"),
+        )
+        part.write.mode("overwrite").parquet(os.path.join(delta_dir, "docs"))
         # per-partition build metrics (north rule: lineage + metrics): read
-        # them back from the committed delta so they describe what landed
-        m = spark.read.parquet(os.path.join(delta_dir, "postings")).agg(
-            F.count(F.lit(1)).alias("np"),
-            F.sum("tf").alias("nt"),
-            F.sum(F.octet_length("pos_vb")).alias("pb"),
+        # them back from the committed block metadata so they describe what
+        # landed — the sentinel rows count docs, the posting rows the rest
+        sent = F.col("term") == DOC_META_TERM
+        m = spark.read.parquet(os.path.join(delta_dir, "blocks")).agg(
+            F.sum(F.when(sent, F.col("n"))).alias("nd"),
+            F.sum(F.when(~sent, F.col("n"))).alias("np"),
+            F.sum(F.when(~sent, F.col("tf_sum"))).alias("nt"),
+            F.sum(F.when(~sent, F.octet_length("positions_blob"))).alias("pb"),
         ).collect()[0]
+        n_docs = int(m["nd"] or 0)
         wall_ms = int((time.time() - t0) * 1000)
         manifest_row = spark.createDataFrame(
             [(
-                pid, "done", int(n_docs), wall_ms, int(m["np"]), int(m["nt"] or 0),
+                pid, "done", n_docs, wall_ms, int(m["np"] or 0), int(m["nt"] or 0),
                 int(m["pb"] or 0),
                 round(n_docs / max(wall_ms / 1000.0, 1e-3), 1),
             )],
@@ -107,40 +122,20 @@ def build_partitioned(
     return committed_now
 
 
-def finalize_index(spark: SparkSession, path: str, n_parts: int = 8, block: int = 512):
-    """Union committed deltas -> stats -> blocks -> final index tables.
+def finalize_index(spark: SparkSession, path: str, n_parts: int = 8):
+    """Replay the lineage: union the committed partitions' blocks and
+    docstore slices -> final index handle, with no second pack.
 
     Reads ONLY the manifest's committed partition directories (a wildcard
     glob would silently union stale deltas left at the same path by an
-    earlier build with a different n_parts), and packs blocks ONCE in the
-    doc-sharded serving layout — the same blocks serve WAND metadata
-    sweeps and bulk analytics (cf. build_index), so the second full
-    shuffle+pack pass the old code ran bought nothing.
+    earlier build with a different n_parts), through the same
+    ``_shard``-restoring reader ``load_index`` uses; docN/avgdl, doc_meta
+    and term_stats derive from the blocks exactly as in ``build_index``.
     """
-    from ..operators.blocks import pack_blocks, unpack_blocks
-    from .build import InvertedIndex
-
-    done = committed_partitions(spark, path)
-    if len(done) != n_parts:
-        missing = sorted(set(range(n_parts)) - done)
+    missing = sorted(set(range(n_parts)) - committed_partitions(spark, path))
+    if missing:
         raise RuntimeError(f"cannot finalize: partitions missing {missing}")
-    expected = sorted(set(range(n_parts)))
-    post_dirs = [os.path.join(path, f"delta_p{pid:04d}", "postings") for pid in expected]
-    doc_dirs = [os.path.join(path, f"delta_p{pid:04d}", "docs") for pid in expected]
-    rows = spark.read.parquet(*post_dirs)
-    docs = spark.read.parquet(*doc_dirs)
-    dmeta = docs.select("doc_id", "doclen")
-    stats = P.collection_stats(dmeta)
-    tstats = P.term_stats(rows.select("term", "doc_id", "tf"))
-    doc_blocks = pack_blocks(rows, block=block, layout="doc")
-    return InvertedIndex(
-        postings=unpack_blocks(doc_blocks),
-        blocks=doc_blocks,
-        doc_meta=dmeta,
-        term_stats=tstats,
-        docstore=docs.select("doc_id", "url", "text"),
-        docN=stats["docN"],
-        avgdl=stats["avgdl"],
-        doc_blocks=doc_blocks,
-        len_sum=stats.get("len_sum"),
-    )
+    deltas = [_delta_dir(path, pid) for pid in range(n_parts)]
+    blocks = read_blocks(spark, *[os.path.join(d, "blocks") for d in deltas])
+    docstore = spark.read.parquet(*[os.path.join(d, "docs") for d in deltas])
+    return index_from_blocks(blocks, docstore)

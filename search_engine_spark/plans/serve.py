@@ -2,7 +2,7 @@
 
 THE scalable serving design (and how the reference runs distributed in
 practice): the posting blocks are doc-range sharded (every term of a doc in
-one shard, blocks.pack_blocks layout="doc"), so a query is
+one shard, as blocks.invert_pack_blocks writes them), so a query is
 
   narrow mapInPandas over term-filtered blocks (per shard: decode ->
   vectorized BM25 + proximity + local bounded top-k, all numpy)

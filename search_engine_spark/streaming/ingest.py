@@ -3,10 +3,11 @@
 The reference indexes in restartable batch (indexer/index.c resume from
 docN) and serves online; it has no streaming operator. At web scale the
 natural Spark extension is a streaming ingest of newly crawled pages into
-posting deltas — same inverted-frame pass, driven by a file/Kafka source
-with exactly-once foreachBatch sinks. Periodic compaction (the reference's
-``repo.merge()``, term-index/term-index.cpp:94-101) merges deltas into the
-main posting table offline.
+packed posting blocks — the same fused ``invert_pack_blocks`` stage the
+batch build runs, driven by a file/Kafka source with exactly-once
+foreachBatch sinks. Periodic compaction (the reference's ``repo.merge()``,
+term-index/term-index.cpp:94-101) merges the batches into the main index
+offline.
 
 Streaming docIDs cannot be row_number() over a closed corpus; we use
 ``xxhash64(url)`` — deterministic, cluster-size independent, collision
@@ -19,7 +20,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..corpus import CORPUS_SCHEMA
-from ..functions.tokenizer import inverted_frame
+from ..operators.blocks import invert_pack_blocks
 
 
 def stream_index_build(
@@ -30,8 +31,10 @@ def stream_index_build(
     available_now: bool = True,
 ):
     """File-source streaming build: new parquet files under ``input_dir``
-    become posting-delta writes under ``out_dir``/postings. Returns the
-    terminated StreamingQuery (availableNow) or the running handle.
+    become packed posting blocks under ``out_dir``/blocks (doc-meta
+    sentinel rows included) plus their docstore rows under
+    ``out_dir``/docs. Returns the terminated StreamingQuery (availableNow)
+    or the running handle.
 
     The sink is idempotent per micro-batch: each batch writes to a
     batch-id-named subdirectory with overwrite, so a foreachBatch retry
@@ -41,12 +44,11 @@ def stream_index_build(
     src = spark.readStream.schema(CORPUS_SCHEMA).parquet(input_dir)
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
-        docs = batch_df.withColumn("doc_id", F.xxhash64("url"))
-        inv = inverted_frame(docs)
-        inv.write.mode("overwrite").parquet(f"{out_dir}/postings/batch={batch_id}")
-        docs.select("doc_id", "url", "text").write.mode("overwrite").parquet(
-            f"{out_dir}/docs/batch={batch_id}"
+        docs = batch_df.select(F.xxhash64("url").alias("doc_id"), "url", "text")
+        invert_pack_blocks(docs).write.mode("overwrite").parquet(
+            f"{out_dir}/blocks/batch={batch_id}"
         )
+        docs.write.mode("overwrite").parquet(f"{out_dir}/docs/batch={batch_id}")
 
     writer = (
         src.writeStream.foreachBatch(process)

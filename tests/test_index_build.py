@@ -186,6 +186,56 @@ def test_loaded_index_partitions_own_disjoint_doc_runs(spark, index200, tmp_path
         spark.conf.set(key, old)
 
 
+def test_saved_index_holds_one_block_table(spark, index200, tmp_path):
+    """save_index writes the posting blocks once (blocks/ with _shard), the
+    loaded handle serves that one frame and ranks exactly as the in-memory
+    index, and a blocks/ without _shard (the old two-table layout) is
+    refused with the rebuild error."""
+    import os
+
+    import pytest
+
+    from search_engine_spark.plans.build import load_index, save_index
+    from search_engine_spark.plans.query import search_many
+
+    path = str(tmp_path / "idx_one")
+    save_index(index200, path)
+    assert not os.path.exists(f"{path}/doc_blocks")
+    assert "_shard" in spark.read.parquet(f"{path}/blocks").columns
+    loaded = load_index(spark, path)
+    assert loaded.blocks is loaded.doc_blocks
+    workload = {
+        "or2": ("waaab waaac", "or"),
+        "and2": ("waaad waaaj", "and"),
+        "negidf": ("waaaa waaaf", "or"),
+    }
+
+    def ranked(idx):
+        rows = search_many(spark, idx, workload).collect()
+        return sorted((r["qid"], r["rank"], r["doc_id"], round(r["score"], 9)) for r in rows)
+
+    assert ranked(loaded) == ranked(index200)
+
+    old = str(tmp_path / "idx_old")
+    save_index(index200, old)
+    spark.read.parquet(f"{path}/blocks").drop("_shard").write.mode("overwrite").parquet(
+        f"{old}/blocks"
+    )
+    with pytest.raises(ValueError, match="rebuild the index"):
+        load_index(spark, old)
+
+
+def test_loaded_index_cache_warms_served_blocks(spark, index200, tmp_path):
+    """InvertedIndex.cache() on a loaded index persists the blocks the
+    shard kernel serves (SearchEngine.load(...).warm() with no budget)."""
+    from search_engine_spark.plans.build import load_index, save_index
+
+    path = str(tmp_path / "idx_warm")
+    save_index(index200, path)
+    loaded = load_index(spark, path).cache()
+    assert loaded.doc_blocks.is_cached
+
+
 def test_doc_ids_unique_deterministic_and_rank_exact(spark):
     """Regression for the round-4 400k finding: the old two-phase scheme
     derived bucket ids from repartitionByRange + spark_partition_id, whose

@@ -132,7 +132,7 @@ def test_merge_equals_straight_build(spark, corpus200):
     full = build_index(spark, ided, id_col="doc_id", block=32)
     ia = build_index(spark, ided.where(F.col("doc_id") % 2 == 0), id_col="doc_id", block=32)
     ib = build_index(spark, ided.where(F.col("doc_id") % 2 == 1), id_col="doc_id", block=32)
-    merged = merge_indexes(ia, ib, block=32)
+    merged = merge_indexes(ia, ib)
 
     assert merged.docN == full.docN
     assert merged.avgdl == pytest.approx(full.avgdl, abs=1e-9)
@@ -170,7 +170,7 @@ def test_merge_rejects_overlap(spark, corpus200):
     ia = build_index(spark, ided.where(F.col("doc_id") <= 120), id_col="doc_id", block=32)
     ib = build_index(spark, ided.where(F.col("doc_id") >= 100), id_col="doc_id", block=32)
     with pytest.raises(ValueError, match="overlap"):
-        merge_indexes(ia, ib, block=32)
+        merge_indexes(ia, ib)
 
 
 def test_real_decode_path_gated_on_pillow(spark):

@@ -1,12 +1,15 @@
 """Structured Streaming: incremental ingest produces the same postings as
-batch; watermarked window agg matches the batch equivalent."""
+an independent pure-Python inversion; watermarked window agg matches the
+batch equivalent."""
 
 from __future__ import annotations
 
-import pytest
+from collections import Counter
+
 from pyspark.sql import functions as F
 
-from search_engine_spark.functions.tokenizer import inverted_frame
+from search_engine_spark.functions.tokenizer import tokenize_text
+from search_engine_spark.operators.blocks import unpack_blocks
 from search_engine_spark.streaming.ingest import stream_index_build, windowed_event_counts
 
 
@@ -17,16 +20,23 @@ def test_stream_build_matches_batch(spark, corpus200, tmp_path):
     corpus200.write.parquet(inp)
 
     stream_index_build(spark, inp, out, ckpt)
-    got = spark.read.parquet(f"{out}/postings")
-
-    batch = inverted_frame(corpus200.withColumn("doc_id", F.xxhash64("url")))
+    got = unpack_blocks(spark.read.parquet(f"{out}/blocks"))
     a = sorted((r["doc_id"], r["term"], r["tf"]) for r in got.select("doc_id", "term", "tf").collect())
-    b = sorted((r["doc_id"], r["term"], r["tf"]) for r in batch.select("doc_id", "term", "tf").collect())
+
+    # oracle: the reference tokenizer counted per doc, tf capped at 2048,
+    # under the streaming docIDs (xxhash64 of the url)
+    docs = corpus200.select(F.xxhash64("url").alias("doc_id"), "text").collect()
+    b = sorted(
+        (r["doc_id"], term, min(tf, 2048))
+        for r in docs
+        for term, tf in Counter(tokenize_text(r["text"])).items()
+    )
     assert a == b
 
     # restart with the same checkpoint: no reprocessing, no duplicate rows
     stream_index_build(spark, inp, out, ckpt)
-    assert spark.read.parquet(f"{out}/postings").count() == len(a)
+    assert unpack_blocks(spark.read.parquet(f"{out}/blocks")).count() == len(a)
+    assert spark.read.parquet(f"{out}/docs").count() == len(docs)
 
 
 def test_windowed_event_counts_matches_batch(spark, tmp_path):
