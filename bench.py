@@ -27,6 +27,7 @@ from __future__ import annotations
 
 import json
 import os
+import re
 import subprocess
 import sys
 import time
@@ -457,7 +458,10 @@ def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     n_docs = int(os.environ.get("BENCH_DOCS", "100000"))
-    sf = 0.1 if "sf0.1" in sf_dir else (0.01 if "sf0.01" in sf_dir else 0.001)
+    # the scale factor is the number in the directory's name (sf1.0 -> 1.0);
+    # None when the name carries none
+    m = re.fullmatch(r"sf(\d+(?:\.\d+)?)", os.path.basename(os.path.normpath(sf_dir)))
+    sf = float(m.group(1)) if m else None
 
     if "--scaling" in sys.argv:
         # scaling evidence needs a compute-dominated run: bigger corpus.

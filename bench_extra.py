@@ -70,9 +70,9 @@ def cmd_noop(names: list[str]) -> None:
 
 
 def cmd_qps() -> None:
-    """Decompose the 512-query batch: keyword resolution collect, the
-    shard-kernel job alone (noop over the pre-rank local rows), and the
-    full search_many with the rank window."""
+    """Decompose the 512-query batch: keyword resolution, the shard-kernel
+    job alone (``shard_search``: the per-shard top-k rows, collected), and
+    the full search_many with the rank window."""
     from search_engine_spark.corpus import synth_corpus, vocab_word as W
     from search_engine_spark.plans.build import build_index
     from search_engine_spark.plans.query import search_many
@@ -114,9 +114,7 @@ def cmd_qps() -> None:
 
     kws = resolve_keywords(spark, idx, workload)
     best_of("resolve_keywords", lambda: resolve_keywords(spark, idx, workload))
-    # kernel output BEFORE the rank window: shard_search minus its window —
-    # reconstruct by calling shard_search and dropping to the pre-window
-    # frame is not public; time the full thing and the collect-variant
+    best_of("shard_search_collect", lambda: shard_search(spark, idx, kws).collect())
     best_of("search_many_noop", lambda: _noop(search_many(spark, idx, workload)))
     best_of("search_many_collect", lambda: search_many(spark, idx, workload).collect())
     best_of(

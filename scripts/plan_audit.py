@@ -3,8 +3,9 @@
 Prints the properties the 1000-executor story rests on, WITH the actual
 ``explain("formatted")`` output so they are checkable claims, not prose:
 
-- serving: ONE mapInPandas over the term-filtered block frame, the only
-  exchange is the final per-qid rank window (n_shards*k candidate rows);
+- serving: ONE mapInPandas over the term-filtered block frame, ranked by
+  a TakeOrderedAndProject with no exchange (the daemon merges the same
+  per-shard top-k rows on the driver);
 - saved-store serving: the term predicate reaches the parquet scan
   (PushedFilters) and the scan reads only the posting-block columns;
 - MNC candidate generation: broadcast hash equi-joins, NO
@@ -71,7 +72,7 @@ def main() -> None:
     from pyspark.sql import functions as F
 
     from search_engine_spark.corpus import synth_corpus, vocab_word as W
-    from search_engine_spark.plans import serve
+    from search_engine_spark.plans.query import search
     from search_engine_spark.plans.build import build_index, load_index, save_index
     from search_engine_spark.session import get_spark
 
@@ -90,16 +91,14 @@ def main() -> None:
     ]
 
     # --- 1. COLD serving straight off the saved store ---------------------
-    # the honest end-to-end plan: parquet scan -> term-filtered -> one
-    # Python kernel -> rank window. The build's cached lineage would bloat
-    # an in-memory index's explain output, so the audit uses the store.
+    # the honest end-to-end plan of a ranked query: parquet scan ->
+    # term-filtered -> one Python kernel -> top-k of its per-shard rows. The
+    # build's cached lineage would bloat an in-memory index's explain
+    # output, so the audit uses the store.
     store = "/dev/shm/plan_audit_idx"
     save_index(idx, store)
     cold = load_index(spark, store)
-    resolved = serve.resolve_keywords(
-        spark, cold, {"q1": (f"{W(1)} {W(2)}", "or"), "q2": (f"{W(3)} {W(9)}", "and")}
-    )
-    plan = explain_str(serve.shard_search(spark, cold, resolved))
+    plan = explain_str(search(spark, cold, f"{W(1)} {W(2)}", serving="shard"))
     out.append(section(
         "BM25 serving, cold, straight off the parquet store",
         plan,
@@ -114,11 +113,14 @@ def main() -> None:
              and "text" not in plan.split("ReadSchema")[1][:400]),
             ("scoring runs in ONE Python stage (MapInPandas)",
              plan.count("MapInPandas") >= 1),
-            ("exactly one Exchange — the per-qid rank window over "
-             "n_shards*k candidate rows; the scan-to-kernel path is "
-             "shuffle-free (whole-file splits preserve the doc-sharded "
-             "layout, plans/build.load_index)",
-             _node_names(plan).count("Exchange") == 1),
+            ("the per-shard top-k rows rank in ONE TakeOrderedAndProject "
+             "(searchd's batches merge the same rows on the driver)",
+             "TakeOrderedAndProject" in plan),
+            ("no Exchange, since the shard kernel output is the whole "
+             "serving plan below the top-k: whole-file splits preserve the "
+             "doc-sharded layout (plans/build.load_index). A search_many "
+             "batch still ranks with a per-qid window, which shuffles",
+             _node_names(plan).count("Exchange") == 0),
             ("no join anywhere in the serving plan",
              "Join" not in plan),
         ],

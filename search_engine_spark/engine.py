@@ -114,7 +114,10 @@ class SearchEngine:
 
     def warm(self, cache_budget_bytes: int | None = None) -> "SearchEngine":
         """Daemon-start warm-up (indices.c:128-178): budgeted hot-term cache
-        or full persist of the serving tables."""
+        or full persist of the serving tables, then the df dictionary,
+        loaded onto the handle that serves (plans/serve.df_lookup)."""
+        from .plans.serve import df_lookup
+
         if cache_budget_bytes is None:
             self.index.cache()
         else:
@@ -122,6 +125,7 @@ class SearchEngine:
 
             cache = build_posting_cache(self.index, cache_budget_bytes)
             self.index = attach_posting_cache(self.index, cache)
+        df_lookup(self.index, [])
         return self
 
     # ------------------------------------------------------------- query --
@@ -232,14 +236,14 @@ class SearchEngine:
 
     def query_json_many(self, requests: list[tuple[str, int, str]]) -> list[dict]:
         """Batched daemon replies: N ``(qtext, page, mode)`` requests in,
-        N ``query_json``-shaped dicts out — ONE ``search_many`` plan plus an
-        id-pruned docstore probe; each request's page of snippets renders
-        driver-side (the searchd micro-batcher drains concurrent POSTs
-        through here, so 32 concurrent clients cost one Spark job instead
-        of 32 serialized ones). Math-bearing requests fall back to the
-        per-query mixed path; admission rejections are answered without
-        touching Spark."""
-        from .plans.query import search_many
+        N ``query_json``-shaped dicts out — two Spark jobs for the whole
+        batch: the shard kernel and an id-pruned docstore probe; each
+        request's page of snippets renders driver-side (the searchd
+        micro-batcher drains concurrent POSTs through here, so 32
+        concurrent clients cost two jobs instead of 32 serialized
+        queries). Math-bearing requests fall back to the per-query mixed
+        path; admission rejections are answered without touching Spark."""
+        from .plans.serve import resolve_keywords, shard_search
 
         out: list[dict | None] = [None] * len(requests)
         queries: dict[str, tuple[str, str]] = {}
@@ -260,26 +264,25 @@ class SearchEngine:
         if queries:
             from pyspark.sql import functions as F
 
-            # ONE Spark job: the rank set is bounded by design — at most
-            # MAX_BATCH drained requests x the 155-deep rank window
-            # (search/config.h:29) of (qid, doc_id, score) triples — so the
-            # whole set collects to the driver and paging/tot_pages are
-            # in-process, exactly the reference daemon's proc_results shape
-            # (searchd/utils.c:173-389 renders its page on the serving
-            # node). Snippets render ONLY each request's page window, not
-            # the 155-deep set. vs the render-everything pipeline this
-            # replaced: one job instead of three (search+count, rank
-            # window, UDF render), and the daemon/batch wall ratio at 32
-            # concurrent clients dropped from ~2x to ~1.2x (interleaved
-            # best-of-N, 400k docs).
+            # ONE Spark job for the rank set: the shard kernel's per-shard
+            # top-k rows (at most n_shards x the 155-deep rank window,
+            # search/config.h:29, of (qid, doc_id, score) triples per
+            # request) collect to the driver, which merges them into each
+            # request's top-k — the reference's per-shard heaps merged on
+            # the serving node (search/minheap.c, rank.c). Paging and
+            # tot_pages are then in-process, like the reference daemon's
+            # proc_results (searchd/utils.c:173-389), and snippets render
+            # ONLY each request's page window, not the 155-deep set.
             hit_rows = (
-                search_many(self.spark, self.index, queries)
+                shard_search(self.spark, self.index, resolve_keywords(self.spark, self.index, queries))
                 .select("qid", "doc_id", "score")
                 .collect()
             )
             ranked: dict[str, list] = {}
             for r in sorted(hit_rows, key=lambda r: (r["qid"], -r["score"], r["doc_id"])):
-                ranked.setdefault(r["qid"], []).append(r)
+                top = ranked.setdefault(r["qid"], [])
+                if len(top) < S.RANK_K:
+                    top.append(r)
             totals = {qid: len(rs) for qid, rs in ranked.items()}
             page_rows = []
             for qid, (_, page) in pending.items():

@@ -943,7 +943,7 @@ def _q_postcache_equiv(spark, sf_dir):
     the BUDGETED warm view (df-hottest terms persisted in memory, cold
     terms streamed from the store — reference indices/postcache.c split)
     and require output identical to the plain oracle. A tiny budget forces
-    BOTH the hot (cached) and cold (anti-join) paths to carry terms."""
+    BOTH the hot (cached) and cold (streamed) paths to carry terms."""
     from .plans.cache import attach_posting_cache, build_posting_cache
 
     idx = get_index(spark, sf_dir)

@@ -63,13 +63,15 @@ class InvertedIndex:
     docN: int
     avgdl: float
     # the blocks the shard kernel serves: ``blocks`` itself on every built,
-    # loaded or merged index; attach_posting_cache swaps in the cold half
-    # and None forces the set-oriented scorer
+    # loaded or merged index; None forces the set-oriented scorer
     doc_blocks: DataFrame | None = None
     # posting-cache pool broadcast (pool, bounds) set by
     # plans.cache.attach_posting_cache; carried on the index handle (NOT on
     # a DataFrame attribute, which silently vanishes under any transform)
     hot_pool_bc: object = None
+    # the terms whose blocks the pool holds: serving streams only the
+    # query's OTHER terms from doc_blocks (plans.cache.served_blocks)
+    pool_terms: frozenset = frozenset()
     # exact integer total token count (sum of doclens). Lets merge derive
     # the merged avgdl EXACTLY (len_sum_l + len_sum_r) / (docN_l + docN_r)
     # instead of a float-weighted mean. None on legacy handles.

@@ -41,7 +41,6 @@ DEFAULT_BUDGET = 32 * 1024 * 1024  # postcache.h POSTCACHE_POOL_LIMIT per search
 @dataclass
 class PostingCache:
     hot_terms: DataFrame  # (term, df, term_bytes, cum_bytes)
-    hot_blocks: DataFrame  # persisted block rows of the hot terms
     budget_bytes: int
     bytes_used: int
     n_hot_terms: int
@@ -64,8 +63,8 @@ def _block_bytes() -> F.Column:
 def build_posting_cache(index, budget_bytes: int = DEFAULT_BUDGET) -> PostingCache:
     """Select df-hottest terms until the byte budget fills; materialize
     their block rows into the pool frame. Returns the cache handle
-    (hot_blocks is persisted; hot_rows is the driver-side pool content,
-    bounded by the byte budget)."""
+    (hot_rows is the driver-side pool content, bounded by the byte budget;
+    hot_terms is persisted only while the pool is built)."""
     blocks = index.doc_blocks if index.doc_blocks is not None else index.blocks
     sizes = blocks.groupBy("term").agg(F.sum(_block_bytes()).alias("term_bytes"))
     ranked = sizes.join(index.term_stats.select("term", "df"), "term")
@@ -81,26 +80,29 @@ def build_posting_cache(index, budget_bytes: int = DEFAULT_BUDGET) -> PostingCac
     stats = hot_terms.agg(
         F.count(F.lit(1)).alias("n"), F.coalesce(F.max("cum_bytes"), F.lit(0)).alias("b")
     ).collect()[0]
-    hot_blocks = blocks.join(F.broadcast(hot_terms.select("term")), "term").persist()
-    hot_blocks.count()
+    hot_rows = blocks.join(F.broadcast(hot_terms.select("term")), "term").toPandas()
+    hot_terms.unpersist()
     return PostingCache(
         hot_terms=hot_terms,
-        hot_blocks=hot_blocks,
         budget_bytes=budget_bytes,
         bytes_used=int(stats["b"]),
         n_hot_terms=int(stats["n"]),
-        hot_rows=hot_blocks.toPandas(),
+        hot_rows=hot_rows,
     )
 
 
-def served_blocks(index, cache: PostingCache) -> DataFrame:
-    """The COLD half of the serving split (search.c's cached-vs-on-disk
-    posting split): blocks streamed from the store with the hot terms
-    filtered out. Narrow plan — the doc-sharded partitioning of the parent
-    is preserved. Use ``attach_posting_cache`` to get a servable index; this
-    helper only derives the cold view."""
-    blocks = index.doc_blocks if index.doc_blocks is not None else index.blocks
-    return blocks.join(F.broadcast(cache.hot_terms.select("term")), "term", "left_anti")
+def served_blocks(index, terms) -> DataFrame:
+    """The COLD half of the serving split for ``terms`` (search.c's
+    cached-vs-on-disk posting split): their blocks streamed from the store,
+    less the terms the pool holds (``index.pool_terms``, set by
+    ``attach_posting_cache``). The filter is a literal IN of the query's
+    own cold terms, so the plan's size follows the query, not the cache
+    budget; it is narrow, keeps the doc-sharded partitioning of the parent
+    and starts no job."""
+    cold = sorted(set(terms) - index.pool_terms)
+    # an empty IN list folds the scan away, and with it the per-shard tasks
+    # that merge the pool rows; no block has the empty term
+    return index.doc_blocks.filter(F.col("term").isin(cold or [""]))
 
 
 def partition_doc_ranges(blocks: DataFrame) -> dict[int, object]:
@@ -151,19 +153,22 @@ def partition_doc_ranges(blocks: DataFrame) -> dict[int, object]:
 
 
 def attach_posting_cache(index, cache: PostingCache):
-    """index + cache -> a NEW InvertedIndex whose doc_blocks is the cold
-    view and whose ``hot_pool_bc`` broadcast carries (pool, bounds):
+    """index + cache -> a NEW InvertedIndex whose ``pool_terms`` are the
+    cache's hot terms (``served_blocks`` streams every other term from
+    doc_blocks) and whose ``hot_pool_bc`` broadcast carries (pool, bounds):
 
     - ``bounds``: pid -> merged doc-interval array of each serving-frame
       partition as planned right now (partition_doc_ranges; one cheap
       metadata-column job per attach). Interval sets must be globally
       disjoint — the doc-sharded layout invariant the serving kernel
       requires; overlap raises.
-    - ``pool``: pid -> pandas frame of the hot rows whose doc range falls
-      inside that partition's intervals (np.searchsorted containment — the
-      content-addressed assignment; partition ids recorded at cache-BUILD
-      time never survive to here, so split-conf drift between build and
-      attach is harmless by construction).
+    - ``pool``: pid -> the pickled bytes of a pandas frame of the hot rows
+      whose doc range falls inside that partition's intervals
+      (np.searchsorted containment — the content-addressed assignment;
+      partition ids recorded at cache-BUILD time never survive to here, so
+      split-conf drift between build and attach is harmless by
+      construction). Each shard's slice is pickled on its own, so a task
+      unpickles only its shard's frame.
 
     The shard kernel merges pool[pid] ahead of its cold rows and validates
     the cold rows against bounds[pid], raising on any attach-to-query
@@ -173,15 +178,14 @@ def attach_posting_cache(index, cache: PostingCache):
 
     from .serve import serving_coalesce
 
-    blocks = index.doc_blocks if index.doc_blocks is not None else index.blocks
     # normalize to the SERVING layout before measuring bounds: shard_search
     # coalesces the block frame to one shard per core (serve.serving_coalesce,
     # deterministic whole-parent grouping), so the pool's pid keys must be
-    # derived from the same layout. ``cold`` is a narrow anti-join over the
-    # same parent partitioning, so the identical coalesce target yields the
-    # identical pid grouping.
-    blocks = serving_coalesce(blocks, docN=index.docN)
-    cold = serving_coalesce(served_blocks(index, cache), docN=index.docN)
+    # derived from the same layout. The served frame is a narrow filter over
+    # the same parent partitioning, so the identical coalesce target yields
+    # the identical pid grouping.
+    served = index.doc_blocks if index.doc_blocks is not None else index.blocks
+    blocks = serving_coalesce(served, docN=index.docN)
     bounds = partition_doc_ranges(blocks)
     flat = sorted(
         (int(lo), int(hi), pid) for pid, iv in bounds.items() for lo, hi in iv
@@ -230,4 +234,5 @@ def attach_posting_cache(index, cache: PostingCache):
                 hot[owner == pid].reset_index(drop=True), protocol=5
             )
     bc = blocks.sparkSession.sparkContext.broadcast((pool, bounds))
-    return dataclasses.replace(index, doc_blocks=cold, hot_pool_bc=bc)
+    terms = frozenset(hot["term"]) if hot is not None else frozenset()
+    return dataclasses.replace(index, doc_blocks=served, hot_pool_bc=bc, pool_terms=terms)

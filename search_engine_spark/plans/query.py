@@ -257,6 +257,10 @@ def _scored_topk_pruned(
 
 
 def _rank_limit(final: DataFrame, k: int, grouped: bool) -> DataFrame:
+    """Top-k of scored rows under (score DESC, doc_id ASC): one query's as
+    a TakeOrderedAndProject, or each qid's (with a rank column) as a window.
+    The one rank step of both scorers (the shard kernel's per-shard rows
+    and the set-oriented aggregate)."""
     cols = ["doc_id", "bm25", "match_dim", "n_matched_terms", "prox", "score"]
     if grouped:
         w = Window.partitionBy("qid").orderBy(F.desc("score"), F.asc("doc_id"))
@@ -312,9 +316,8 @@ def search(
         # wand=True turns on in-kernel block-max pruning (each shard seeds
         # its own threshold; zero extra driver round-trips)
         kws = resolve_keywords(spark, index, {"q": (qtext, mode)})
-        return shard_search(
-            spark, index, kws, k=k, with_prox=with_prox, prune=wand
-        ).select("doc_id", "bm25", "match_dim", "n_matched_terms", "prox", "score")
+        local = shard_search(spark, index, kws, k=k, with_prox=with_prox, prune=wand)
+        return _rank_limit(local, k, grouped=False)
 
     kw = _qterms_idf_df(spark, index, [("q", i, t) for i, t in enumerate(terms)])
     return _scored_topk_pruned(
@@ -357,7 +360,8 @@ def search_many(
         from .serve import resolve_keywords, shard_search
 
         kws = resolve_keywords(spark, index, queries)
-        return shard_search(spark, index, kws, k=k, with_prox=with_prox, prune=prune)
+        local = shard_search(spark, index, kws, k=k, with_prox=with_prox, prune=prune)
+        return _rank_limit(local, k, grouped=True)
 
     digested = {qid: digest_query(qtext) for qid, (qtext, _) in queries.items()}
     modes = {qid: mode for qid, (_, mode) in queries.items()}

@@ -6,12 +6,18 @@ one shard, as blocks.invert_pack_blocks writes them), so a query is
 
   narrow mapInPandas over term-filtered blocks (per shard: decode ->
   vectorized BM25 + proximity + local bounded top-k, all numpy)
-  -> union of n_shards * k rows -> global rank window.
+  -> union of n_shards * k rows, ranked by the caller.
 
-ZERO data shuffles per query: the only movement is each shard's k
-candidate rows. The per-shard kernel is exactly the reference's
-document-at-a-time merge loop (search/postmerge.c + search.c:167-278 +
-proximity.c) vectorized over the whole shard instead of doc-at-a-time:
+``shard_search`` returns that union: ONE Spark stage, no shuffle. Its rows
+hold every query's global top-k with the final floats, so the caller's
+merge is the reference's heap merge on the serving node (search/rank.c):
+the daemon sorts the collected rows on the driver (engine.query_json_many),
+``plans.query`` ranks them with its ``_rank_limit`` (TakeOrderedAndProject
+for one query, a per-qid window for a batch).
+
+The per-shard kernel is exactly the reference's document-at-a-time merge
+loop (search/postmerge.c + search.c:167-278 + proximity.c) vectorized over
+the whole shard instead of doc-at-a-time:
 
 - per-term score: idf * tf(k1+1)/(tf + k1(1-b+(k1/avgdl)doclen)) with the
   reference quirks (scoring.py);
@@ -33,7 +39,7 @@ from collections.abc import Iterator
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession, Window, functions as F
+from pyspark.sql import DataFrame, SparkSession
 
 from ..functions import codec
 from ..operators import scoring as S
@@ -692,10 +698,13 @@ def shard_search(
     with_prox: bool = True,
     prune: bool = False,
 ) -> DataFrame:
-    """Batch serve over the doc-sharded blocks.
+    """Batch serve over the doc-sharded blocks: the shard kernel alone.
 
-    ``queries``: qid -> ([(kw_idx, term, idf)], mode). Returns
-    (qid, rank, doc_id, bm25, match_dim, n_matched_terms, prox, score).
+    ``queries``: qid -> ([(kw_idx, term, idf)], mode). Returns each shard's
+    local top-k per qid, (qid, doc_id, bm25, match_dim, n_matched_terms,
+    prox, score), unranked: at most n_shards * k rows per qid, a superset of
+    the qid's global top-k under (score DESC, doc_id ASC). The plan is one
+    narrow stage (no Exchange); the caller ranks the rows.
 
     ``prune=True`` routes the WHOLE workload (any mix of or/and) through
     the shard-local batch block-max WAND (_batch_wand_shard): one sweep,
@@ -707,7 +716,7 @@ def shard_search(
     """
     all_terms = sorted({t for kws, _ in queries.values() for _, t, _ in kws})
     if not all_terms:
-        return spark.createDataFrame([], "qid string, rank int, " + _OUT_SCHEMA[12:])
+        return spark.createDataFrame([], _OUT_SCHEMA)
     # posting-cache pool (plans/cache.attach_posting_cache): hot block rows
     # live in a broadcast of (pool, bounds) carried on the index handle.
     # Assignment is content-addressed (doc-range containment at attach
@@ -715,9 +724,11 @@ def shard_search(
     # — the doc-sharded kernel requires every block of a doc in ONE shard —
     # and VALIDATES the incoming cold rows against the claimed doc bounds,
     # raising on attach-to-query split drift instead of mis-scoring.
+    from .cache import served_blocks
+
     hot_pool = getattr(index, "hot_pool_bc", None)
     term_set = set(all_terms)
-    blocks = serving_coalesce(index.doc_blocks, docN=index.docN).filter(F.col("term").isin(all_terms))
+    blocks = serving_coalesce(served_blocks(index, all_terms), docN=index.docN)
     avgdl = index.avgdl
     qitems = [(qid, kws, mode) for qid, (kws, mode) in queries.items()]
     if prune and sum(1 for _, kws, m in qitems if m == "or" and kws) > PRUNE_MAX_OR_BATCH:
@@ -799,56 +810,31 @@ def shard_search(
         if frames:
             yield pd.concat(frames, ignore_index=True)
 
-    local = blocks.mapInPandas(kernel, _OUT_SCHEMA)
-    w = Window.partitionBy("qid").orderBy(F.desc("score"), F.asc("doc_id"))
-    return (
-        local.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("qid", "rank", "doc_id", "bm25", "match_dim", "n_matched_terms", "prox", "score")
-    )
-
-
-_DF_CACHE_MAX = 1_000_000  # bounded: a hostile query stream cannot grow driver memory
+    return blocks.mapInPandas(kernel, _OUT_SCHEMA)
 
 
 def df_lookup(index, terms: list[str]) -> dict[str, float]:
-    """term -> df for ``terms``, through a bounded per-index dictionary cache.
+    """term -> df for ``terms`` (0 for a term outside the vocabulary).
 
-    The reference daemon holds its term dictionary hot across requests
-    (Indri's term lookup + indices/postcache.c); the Spark twin is a plain
-    dict on the index handle. Only terms not yet seen run the term_stats
-    lookup job — a steady-state serving session pays the Spark job once per
-    NEW term, not once per query. Absent terms cache as df=0 (the dictionary
-    answers "not in vocabulary" without re-probing). The cache clears at
-    ``_DF_CACHE_MAX`` entries so driver memory stays bounded at web-scale
-    vocabularies; index handles are immutable (merge builds a new one), so
-    entries can never go stale.
+    The reference daemon holds its term dictionary in memory (Indri's term
+    lookup + indices/postcache.c). The first call for an index handle
+    collects ``term_stats`` (term, df) in one job; every later lookup is a
+    dict probe that starts no job, absent terms included. The dictionary's
+    size is the vocabulary's, whatever the queries ask for. Index handles
+    are immutable (merge builds a new one), so it can never go stale.
     """
-    cache = getattr(index, "_df_cache", None)
-    if cache is None:
-        cache = {}
-        index._df_cache = cache
-    missing = [t for t in terms if t not in cache]
-    if missing:
-        rows = (
-            index.term_stats.filter(F.col("term").isin(missing))
-            .select("term", "df")
-            .collect()
-        )
-        got = {r["term"]: float(r["df"]) for r in rows}
-        if len(cache) + len(missing) > _DF_CACHE_MAX:
-            cache.clear()
-        for t in missing:
-            cache[t] = got.get(t, 0.0)
-    return {t: cache[t] for t in terms}
+    dfs = getattr(index, "_df_cache", None)
+    if dfs is None:
+        rows = index.term_stats.select("term", "df").collect()
+        dfs = index._df_cache = {r["term"]: float(r["df"]) for r in rows}
+    return {t: dfs.get(t, 0.0) for t in terms}
 
 
 def resolve_keywords(spark: SparkSession, index, queries: dict[str, tuple[str, str]]):
     """qid -> (qtext, mode)  =>  qid -> ([(kw_idx, term, idf)], mode).
 
-    At most one tiny term_stats lookup for the whole batch (reference
-    Q3/Q5), and none at all when every term is already in the index's
-    df dictionary cache (``df_lookup``)."""
+    The df values come from the index's in-memory df dictionary
+    (``df_lookup``, reference Q3/Q5)."""
     from .query import digest_query
 
     digested = {qid: (digest_query(qtext), mode) for qid, (qtext, mode) in queries.items()}

@@ -135,10 +135,16 @@ def make_handler(batcher: MicroBatcher):
     return SearchHandler
 
 
+class SearchServer(ThreadingHTTPServer):
+    # listen backlog: socketserver's default of 5 resets simultaneous
+    # connects beyond it, so room for two full micro-batches of clients
+    request_queue_size = 2 * MAX_BATCH
+
+
 def serve(engine, port: int = DEFAULT_PORT, block: bool = True):
     """Start the daemon; returns the server object (non-blocking callers
     shut it down with ``server.shutdown()``)."""
-    srv = ThreadingHTTPServer(("127.0.0.1", port), make_handler(MicroBatcher(engine)))
+    srv = SearchServer(("127.0.0.1", port), make_handler(MicroBatcher(engine)))
     if block:
         srv.serve_forever()
     else:

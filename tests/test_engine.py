@@ -48,6 +48,30 @@ def test_engine_build_save_load_math(spark, tmp_path):
     assert {r["doc_id"] for r in hits} >= {1, 2}
 
 
+def test_budgeted_warm_scores_mixed_math_query_like_plain(spark, tmp_path):
+    """The mixed math path reads doc_blocks without the posting-cache pool,
+    so a budgeted warm must leave doc_blocks whole: a budget that caches
+    every term still scores the term side of a math query."""
+    docs = spark.createDataFrame(
+        [
+            (1, "https://m/1", "energy relation [imath]E=mc^2[/imath] here"),
+            (2, "https://m/2", "another [imath]E=mc^3[/imath] formula energy"),
+            (3, "https://m/3", "plain words only energy"),
+        ],
+        "doc_id long, url string, text string",
+    )
+    path = str(tmp_path / "idx")
+    SearchEngine.build(spark, docs, with_math=True, id_col="doc_id").save(path)
+    q = "relation [imath]E=mc^2[/imath]"
+
+    def hits(eng):
+        return [(r["doc_id"], round(r["score"], 9)) for r in eng.query(q).collect()]
+
+    hot = SearchEngine.load(spark, path).warm(1 << 20)
+    assert "relation" in hot.index.pool_terms
+    assert hits(hot) == hits(SearchEngine.load(spark, path).warm())
+
+
 def test_loaded_math_lr_probe_prunes_partitions(spark, tmp_path):
     """engine.save partitions the math tables by the probe key's hash
     bucket; a loaded engine's MNC candidate scan must carry the bucket

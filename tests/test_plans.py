@@ -51,15 +51,16 @@ def test_topk_is_take_ordered(spark, index200):
 
 
 def test_shard_serving_has_no_data_shuffle(spark, index200):
-    # doc-sharded serving: the only Exchange in the plan is the final rank
-    # window over n_shards*k candidate rows — posting data never shuffles
+    # doc-sharded serving: the shard kernel's per-shard top-k rows are
+    # ranked by a TakeOrderedAndProject — no Exchange, posting data and
+    # candidate rows never shuffle
     df = search(spark, index200, f"{W(1)} {W(2)}", serving="shard")
     plan = _plan(df)
     # inspect only the serving section (the cached doc_blocks' build lineage
     # below InMemoryTableScan re-lists the index-build exchanges)
     serving_section = plan.split("InMemoryTableScan")[0]
     assert "MapInPandas" in serving_section
-    assert serving_section.count("Exchange") <= 1  # only the final rank window
+    assert serving_section.count("Exchange") == 0
     assert "BroadcastExchange" not in serving_section  # no join at all
 
 

@@ -48,10 +48,12 @@ def test_budget_respected_and_hottest_first(spark, index200):
     assert got == expect
     assert cache.n_hot_terms == len(expect)
     # 3. cold frame + pool content cover exactly the full block set
-    assert served_blocks(index200, cache).count() + len(cache.hot_rows) == index200.doc_blocks.count()
+    warm = attach_posting_cache(index200, cache)
+    assert warm.pool_terms == set(expect)
+    vocab = [r["term"] for r in index200.doc_blocks.select("term").distinct().collect()]
+    assert served_blocks(warm, vocab).count() + len(cache.hot_rows) == index200.doc_blocks.count()
     assert len(cache.hot_rows) > 0
     # 4. attach assigns every pool row to exactly one shard
-    warm = attach_posting_cache(index200, cache)
     raw_pool, bounds = warm.hot_pool_bc.value
     # pool slices are pickled per shard so a serving task deserializes only
     # its own shard's frame (plans/cache.attach_posting_cache)
@@ -67,20 +69,17 @@ def test_budget_respected_and_hottest_first(spark, index200):
             at = np.searchsorted(iv[:, 0], doc, side="right") - 1
             assert (at >= 0).all()
             assert (doc <= iv[at, 1]).all()
-    cache.hot_blocks.unpersist()
-    cache.hot_terms.unpersist()
 
 
 def test_zero_budget_caches_nothing(spark, index200):
     cache = build_posting_cache(index200, budget_bytes=0)
     assert cache.n_hot_terms == 0 and cache.bytes_used == 0
-    assert served_blocks(index200, cache).count() == index200.doc_blocks.count()
     assert len(cache.hot_rows) == 0
     warm = attach_posting_cache(index200, cache)
+    vocab = [r["term"] for r in index200.doc_blocks.select("term").distinct().collect()]
+    assert served_blocks(warm, vocab).count() == index200.doc_blocks.count()
     pool, _ = warm.hot_pool_bc.value
     assert pool == {}
-    cache.hot_blocks.unpersist()
-    cache.hot_terms.unpersist()
 
 
 def test_mixed_hot_cold_query_identical(spark, index200):
@@ -110,8 +109,28 @@ def test_mixed_hot_cold_query_identical(spark, index200):
         for r in search(spark, warm_idx, q).collect()
     ]
     assert warm == plain
-    cache.hot_blocks.unpersist()
-    cache.hot_terms.unpersist()
+
+
+def test_hot_only_query_identical(spark, index200):
+    """A query whose terms are all in the pool streams no term from the
+    store, yet every shard must still run to merge its pool rows."""
+    from search_engine_spark.plans.query import search, search_many
+
+    sizes = _term_sizes(index200)
+    order = sorted(sizes, key=lambda r: (-r["df"], r["term"]))
+    cache = build_posting_cache(index200, budget_bytes=order[0]["term_bytes"] + order[1]["term_bytes"])
+    warm_idx = attach_posting_cache(index200, cache)
+    q = f"{order[0]['term']} {order[1]['term']}"
+    assert set(q.split()) <= warm_idx.pool_terms
+    for mode in ("or", "and"):
+        plain = [(r["doc_id"], round(r["score"], 9)) for r in search(spark, index200, q, mode=mode).collect()]
+        warm = [(r["doc_id"], round(r["score"], 9)) for r in search(spark, warm_idx, q, mode=mode).collect()]
+        assert warm == plain and plain
+    batch = {"a": (q, "or"), "b": (order[1]["term"], "or")}
+    key = ("qid", "rank", "doc_id", "score")
+    assert sorted(tuple(r[c] for c in key) for r in search_many(spark, warm_idx, batch).collect()) == sorted(
+        tuple(r[c] for c in key) for r in search_many(spark, index200, batch).collect()
+    )
 
 
 def test_attach_survives_split_conf_drift(spark, index200, tmp_path):
@@ -163,5 +182,3 @@ def test_attach_survives_split_conf_drift(spark, index200, tmp_path):
         assert got_c == plain
     finally:
         spark.conf.set(key, old)
-        cache.hot_blocks.unpersist()
-        cache.hot_terms.unpersist()

@@ -4,6 +4,7 @@
 from __future__ import annotations
 
 import json
+import time
 import urllib.request
 
 import pytest
@@ -100,6 +101,54 @@ def test_concurrent_requests_micro_batched(daemon):
     for t in threads:
         t.join()
     assert got == solo
+
+
+def _with_job_count(spark, fn):
+    """(fn(), the number of Spark jobs it started), counted through a job
+    group once the listener bus has delivered every job event."""
+    sc = spark.sparkContext
+    group = f"job-count-{time.monotonic_ns()}"
+    sc.setJobGroup(group, "job count")
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_warm_batch_starts_two_spark_jobs(spark, index200, tmp_path):
+    """A daemon batch on a warm engine (posting cache attached, df
+    dictionary loaded) starts exactly two Spark jobs, the shard kernel and
+    the docstore probe: no rank-window shuffle, no cold-view broadcast and
+    no df probe, also for terms no earlier request used or the vocabulary
+    lacks. Replies equal query_json's, request by request."""
+    from search_engine_spark.plans.build import save_index
+    from search_engine_spark.plans.serve import df_lookup
+
+    save_index(index200, str(tmp_path / "idx"))
+    eng = SearchEngine.load(spark, str(tmp_path / "idx")).warm(64 << 10)
+    hot = eng.index.pool_terms
+    W = vocab_word
+    assert W(1) in hot and W(39) not in hot  # queries mix hot and cold terms
+    reqs = [
+        (f"{W(1)} {W(39)}", 1, "or"),
+        (f"{W(1)} {W(2)}", 2, "and"),
+        (W(3), 3, "or"),
+        (f"{W(2)} {W(30)}", 1, "and"),
+    ]
+    out, n_jobs = _with_job_count(spark, lambda: eng.query_json_many(reqs))
+    assert n_jobs == 2
+    assert out == [eng.query_json(q, page=p, mode=m) for q, p, m in reqs]
+    assert all(o["ret_code"] == 0 for o in out)
+
+    # terms no request has used yet, and a term outside the vocabulary
+    fresh = [(f"{W(41)} zzzqx", 1, "or"), (f"{W(43)} {W(44)}", 2, "or")]
+    dfs, n_jobs = _with_job_count(spark, lambda: df_lookup(eng.index, [W(41), "zzzqx"]))
+    assert n_jobs == 0 and dfs["zzzqx"] == 0.0 and dfs[W(41)] > 0
+    out, n_jobs = _with_job_count(spark, lambda: eng.query_json_many(fresh))
+    assert n_jobs == 2
+    assert out == [eng.query_json(q, page=p, mode=m) for q, p, m in fresh]
 
 
 def test_keywords_to_qtext_tex_roundtrip():
